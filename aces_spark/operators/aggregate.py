@@ -40,6 +40,7 @@ ARCHITECTURE.md for the mitigation plan.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from datetime import timedelta
 
 from pyspark.sql import Column, DataFrame, Window
@@ -247,6 +248,7 @@ def boolean_expr_bound_sum(
     prefix: str = "",
     append: bool = False,
     value_cols: list[str] | None = None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
     """Sum all predicate columns between each row (± ``offset``) and the
     nearest per-subject boundary row (reference
@@ -280,6 +282,13 @@ def boolean_expr_bound_sum(
     :func:`aggregate_temporal_window` (fused-planner support: outputs — and
     all internal temp columns — are namespaced so several kernel
     applications can stack on one relation).
+
+    ``carry`` names columns whose value AT THE RESOLVED BOUNDARY ROW is
+    emitted for each row as ``{prefix}{name}`` (null when no boundary
+    qualifies). It rides the same fill frame as ``ts_at_boundary``, packed
+    in one struct so a null carried value never lets the fill skip back to
+    an earlier boundary. The fused planner uses it to read a subtree
+    anchored at the boundary row without a join.
     """
     if mode not in ("bound_to_row", "row_to_bound"):
         raise ValueError(f"Mode '{mode}' invalid!")
@@ -350,9 +359,12 @@ def boolean_expr_bound_sum(
         f"{tp}ts_at_boundary": fill(bnd_ts),
         **{f"{tp}bcum_{c}": fill(bnd_cum(c)) for c in pred_cols},
     }
+    if carry:
+        fill_cols[f"{tp}carry"] = fill(F.when(F.col(f"{tp}bexpr"), F.struct(*carry)))
     filled = base.withColumns(fill_cols)
 
     out_cols = _event_bound_outputs(pred_cols, mode, closed, offset, tp, prefix)
+    out_cols += [F.col(f"{tp}carry").getField(c).alias(f"{prefix}{c}") for c in carry]
     if append:
         return filled.select(*df.columns, *out_cols)
     return filled.select("subject_id", "timestamp", *out_cols)

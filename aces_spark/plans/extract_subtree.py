@@ -4,6 +4,10 @@ Reimplements the reference's recursion (``src/aces/extract_subtree.py:16-386``)
 as a driver-level planner that EMITS a Spark DataFrame DAG — no actions are
 triggered here; the whole tree evaluates lazily in one job.
 
+This is the reference planner, selected with ``query(..., fused=False)``:
+the default join-free planner (``plans/fused.py``) handles every tree, and
+the differential tests compare the two.
+
 Per child edge of the current tree node:
 
 1. Summarize the window root→child over ALL rows — a temporal edge uses the
@@ -50,7 +54,6 @@ def extract_subtree(
     predicates_df: DataFrame,
     subtree_root_offset: timedelta = timedelta(0),
     checkpoint: bool = False,
-    subtree_fusion: bool = True,
 ) -> DataFrame:
     """Evaluate the subtree rooted at ``subtree`` against candidate anchors.
 
@@ -59,27 +62,11 @@ def extract_subtree(
     plus one struct column ``{node}_summary`` per descendant node
     (``window_name``, ``timestamp_at_start``, ``timestamp_at_end``, and all
     predicate counts — reference ``src/aces/extract_subtree.py:366-375``).
-
-    With ``subtree_fusion`` (default), any subtree whose internal edges are
-    all temporal is evaluated by the join-free fused planner
-    (``plans/fused.py``) and inner-joined to the anchor set ONCE — on
-    readmission-shaped trees (event-bound hops mid-tree) this removes most
-    of the per-edge join cascade.
     """
-    from .fused import extract_subtree_fused, fusible_without_junk
-
     predicate_cols = [c for c in predicates_df.columns if c not in {"subject_id", "timestamp"}]
 
     if not subtree.children:
         return subtree_anchor_realizations
-
-    if subtree_fusion and fusible_without_junk(subtree):
-        fused = extract_subtree_fused(
-            subtree, predicates_df, F.lit(True), initial_offset=subtree_root_offset
-        )
-        return fused.join(
-            subtree_anchor_realizations, on=["subject_id", ANCHOR], how="inner"
-        )
 
     recursive_results: list[DataFrame] = []
 
@@ -137,8 +124,7 @@ def extract_subtree(
 
         # Step 5: recurse
         recursive_result = extract_subtree(
-            child, child_anchor_realizations, predicates_df, child_root_offset, checkpoint,
-            subtree_fusion,
+            child, child_anchor_realizations, predicates_df, child_root_offset, checkpoint
         )
 
         # Step 6.1: remap the recursive result to this subtree's anchor space (J2)

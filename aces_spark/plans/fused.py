@@ -1,29 +1,42 @@
-"""Fused window-tree planner: join-free evaluation for anchor-stable trees.
+"""Fused window-tree planner: join-free evaluation of every window tree.
 
 Spark-first optimization with no counterpart in the reference (its recursion
 always materializes + joins per edge, ``src/aces/extract_subtree.py:279-386``).
 
-Key observation: a temporal edge keeps the child anchored on the SAME event
-row (``extract_subtree.py:300-310`` — child anchor = row timestamp), so in a
-tree where every *internal* edge is temporal (event-bound edges only at
-leaves), every node's window summary is indexed by the original event row.
-The whole recursion then collapses into ONE windowed scan:
+Key observations:
+
+* a temporal edge keeps the child anchored on the SAME event row
+  (``extract_subtree.py:300-310`` — child anchor = row timestamp), so its
+  subtree's window summaries are indexed by that row;
+* an event-bound edge moves the child anchor to the resolved boundary
+  row's own timestamp (``:311-327``), and ``(subject_id, timestamp)`` is
+  unique — so the child's subtree is evaluated anchored at EVERY row
+  (offset 0, always valid) and the edge's kernel fills that subtree's
+  columns in from the boundary row (``carry`` of
+  :func:`boolean_expr_bound_sum`, the same fill frame that resolves the
+  boundary timestamp).
+
+The whole recursion then collapses into ONE windowed scan for every tree:
 
 * each node's window sums/timestamps are appended as prefixed columns
   (kernels in append mode — same ``subject_id`` hash partitioning, shared
   sorts, zero shuffles beyond the input's single exchange);
 * anchor-set joins (J1) become row-wise validity flags (trigger ≥ 1 AND
-  each node's constraint check AND, for event-bound leaves, a resolved
-  boundary);
-* sibling-intersection joins (J4) become conjunction of the leaf flags;
-* child→parent remap joins (J2/J3) vanish — the anchor never moves.
+  each edge's constraint check AND, for event-bound edges, a resolved
+  boundary AND the carried validity of the subtree below it);
+* sibling-intersection joins (J4) become conjunction of the edge flags;
+* child→parent remap joins (J2/J3) vanish — a carried summary already
+  sits on the parent anchor's row.
 
 This preserves the general path's exact semantics, including the junk row it
 emits per subject when a pure single-child chain ends in an event-bound leaf
 with no qualifying boundary (the reference's null-key join behavior: the
 realization is replaced by one ``(subject, null)`` row with null summaries).
-Verified by differential tests (``tests/test_fused.py``) against the general
-planner across random trees/frames.
+Only the chain's final event-bound leaf emits it; an internal event-bound
+edge with an unresolved boundary just drops the row, since its null child
+anchor never joins a deeper window. Verified by differential tests
+(``tests/test_fused.py``) against the general planner across random
+trees/frames.
 
 At scale this is the difference between kernel-bound throughput (~3M rows/s
 per 32 cores) and join-bound throughput (~0.3M rows/s) on dense-trigger
@@ -40,19 +53,10 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregate import aggregate_temporal_window, boolean_expr_bound_sum
 from ..types import ANY_EVENT_COLUMN, TemporalWindowBounds
-from ..utils import Node, preorder_iter
+from ..utils import Node
 
 ANCHOR = "subtree_anchor_timestamp"
-
-
-def can_fuse(tree: Node) -> bool:
-    """A tree fuses iff every edge to a non-leaf child is temporal — i.e.
-    anchors never move off the original event row mid-tree."""
-    for node in preorder_iter(tree):
-        for child in node.children:
-            if child.children and not isinstance(child.endpoint_expr, TemporalWindowBounds):
-                return False
-    return True
+SUMMARY_FIELDS = ["timestamp_at_start", "timestamp_at_end"]
 
 
 def _constraint_keep(
@@ -75,33 +79,17 @@ def _constraint_keep(
     return ~should_drop
 
 
-def fusible_without_junk(tree: Node) -> bool:
-    """Fuse-eligible AND free of the chain-censoring junk-row case — the
-    shape where a fused subtree can substitute for the general recursion
-    mid-tree (its result is then inner-joined to the anchor set once,
-    which would wrongly drop junk rows if any were emitted)."""
-    if not can_fuse(tree):
-        return False
-    if not _is_chain(tree):
-        return True
-    node = tree
-    while node.children:
-        node = node.children[0]
-    return isinstance(node.endpoint_expr, TemporalWindowBounds)
-
-
 def extract_subtree_fused(
     subtree: Node,
     predicates_df: DataFrame,
     root_valid: Column,
-    initial_offset: timedelta = timedelta(0),
 ) -> DataFrame:
-    """Evaluate a fuse-eligible window tree in one windowed pipeline.
+    """Evaluate a window tree in one windowed pipeline.
 
     Returns the same shape as the general ``extract_subtree`` after anchor
     selection: ``(subject_id, subtree_anchor_timestamp, {node}_summary...)``
-    with one row per valid trigger realization. ``initial_offset`` folds an
-    accumulated parent offset in when a subtree is fused mid-recursion.
+    with one row per valid trigger realization (plus the junk rows of a
+    pure chain ending in an unresolved event-bound leaf).
     """
     pred_cols = [c for c in predicates_df.columns if c not in ("subject_id", "timestamp")]
 
@@ -110,28 +98,54 @@ def extract_subtree_fused(
             "subject_id", F.col("timestamp").alias(ANCHOR)
         )
 
-    df = predicates_df.withColumn("__valid_root", root_valid)
-
-    node_info: list[tuple[Node, str]] = []  # (node, prefix) in walk order
-    leaf_valid_cols: list[str] = []
-    junk_cond: Column | None = None  # pure-chain + event-bound-leaf censoring
+    df = predicates_df
+    summaries: list[tuple[Node, str]] = []  # (node, column prefix) in pre-order
+    chain = _is_chain(subtree)
     counter = 0
 
-    def walk(node: Node, offset: timedelta, parent_valid: str) -> None:
-        nonlocal df, counter, junk_cond
+    def walk(node: Node, offset: timedelta) -> tuple[Column, Column | None]:
+        """Append the windows of ``node``'s subtree, anchored at every row
+        with the accumulated ``offset``. Returns ``(valid, junk)``: whether
+        every edge below holds at the row, and — in a pure chain ending in
+        an event-bound leaf — whether the row's realization dies only on
+        that leaf's unresolved boundary (the general path's junk row)."""
+        nonlocal df, counter
+        valid: Column = F.lit(True)
+        junk: Column | None = None
         for child in node.children:
             counter += 1
-            pfx = f"__n{counter}_"
+            n = counter
+            pfx = f"__n{n}_"
+            summaries.append((child, pfx))
             eff = dataclasses.replace(
                 child.endpoint_expr, offset=child.endpoint_expr.offset + offset
             )
-            boundary_null: Column | None = None
             if isinstance(eff, TemporalWindowBounds):
                 df = aggregate_temporal_window(
                     df, eff, prefix=pfx, append=True, value_cols=pred_cols
                 )
-                child_offset = offset + eff.window_size
+                keep = _constraint_keep(child.constraints, pfx)
+                sub_valid, sub_junk = walk(child, offset + eff.window_size)
+                edge_valid = keep & sub_valid
+                edge_junk = None if sub_junk is None else keep & sub_junk
             else:
+                # the child anchor is the boundary row itself: evaluate the
+                # child's subtree anchored at every row (offset resets), then
+                # let the kernel fill its columns in from the boundary row
+                carry: list[str] = []
+                sub_junk = None
+                if child.children:
+                    first = len(summaries)
+                    sub_valid, sub_junk = walk(child, timedelta(0))
+                    sub_cols = {f"__v{n}": sub_valid}
+                    if sub_junk is not None:
+                        sub_cols[f"__j{n}"] = sub_junk
+                    df = df.withColumns(sub_cols)
+                    carry = list(sub_cols)
+                    for i in range(first, len(summaries)):
+                        desc, dpfx = summaries[i]
+                        carry += [f"{dpfx}{c}" for c in SUMMARY_FIELDS + pred_cols]
+                        summaries[i] = (desc, pfx + dpfx)
                 kw = eff.bound_sum_kwargs
                 df = boolean_expr_bound_sum(
                     df,
@@ -142,56 +156,48 @@ def extract_subtree_fused(
                     prefix=pfx,
                     append=True,
                     value_cols=pred_cols,
+                    carry=carry,
                 )
                 bnd_side = (
                     "timestamp_at_start" if kw["mode"] == "bound_to_row" else "timestamp_at_end"
                 )
-                boundary_null = F.col(f"{pfx}{bnd_side}").isNull()
-                child_offset = timedelta(0)
-
-            keep = _constraint_keep(child.constraints, pfx)
-            valid = F.col(parent_valid) & keep
-            if boundary_null is not None:
+                resolved = F.col(f"{pfx}{bnd_side}").isNotNull()
+                keep = _constraint_keep(child.constraints, pfx)
                 # the general path drops anchors whose boundary is unresolved
                 # (their null child anchor never re-joins); see module doc
-                valid = valid & ~boundary_null
-                if len(node.children) == 1 and junk_cond is None and _is_chain(subtree):
-                    junk_cond = F.col(parent_valid) & keep & boundary_null
-            vcol = f"{pfx}valid"
-            df = df.withColumn(vcol, valid)
-            node_info.append((child, pfx))
-            if child.children:
-                walk(child, child_offset, vcol)
-            else:
-                leaf_valid_cols.append(vcol)
+                edge_valid = keep & resolved
+                if child.children:
+                    edge_junk = (
+                        None if sub_junk is None else edge_valid & F.col(f"{pfx}__j{n}")
+                    )
+                    edge_valid = edge_valid & F.col(f"{pfx}__v{n}")
+                else:
+                    edge_junk = keep & ~resolved if chain else None
+            valid = valid & edge_valid
+            junk = edge_junk  # None unless a pure chain (one child per node)
+        return valid, junk
 
-    walk(subtree, initial_offset, "__valid_root")
-
-    all_valid = F.col(leaf_valid_cols[0])
-    for vc in leaf_valid_cols[1:]:
-        all_valid = all_valid & F.col(vc)
+    valid, junk = walk(subtree, timedelta(0))
 
     struct_cols = []
-    for child, pfx in node_info:
+    for child, pfx in summaries:
         struct_cols.append(
             F.struct(
                 F.lit(child.name).alias("window_name"),
-                F.col(f"{pfx}timestamp_at_start").alias("timestamp_at_start"),
-                F.col(f"{pfx}timestamp_at_end").alias("timestamp_at_end"),
-                *[F.col(f"{pfx}{c}").alias(c) for c in pred_cols],
+                *[F.col(f"{pfx}{c}").alias(c) for c in SUMMARY_FIELDS + pred_cols],
             ).alias(f"{child.name}_summary")
         )
 
-    result = df.filter(F.coalesce(all_valid, F.lit(False))).select(
+    result = df.filter(F.coalesce(root_valid & valid, F.lit(False))).select(
         "subject_id", F.col("timestamp").alias(ANCHOR), *struct_cols
     )
 
-    if junk_cond is not None:
+    if junk is not None:
         struct_types = {
             f.name: f.dataType for f in result.schema.fields if f.name.endswith("_summary")
         }
-        junk = (
-            df.filter(F.coalesce(junk_cond, F.lit(False)))
+        junk_rows = (
+            df.filter(F.coalesce(root_valid & junk, F.lit(False)))
             .select("subject_id")
             .distinct()
             .select(
@@ -203,7 +209,7 @@ def extract_subtree_fused(
                 ],
             )
         )
-        result = result.unionByName(junk)
+        result = result.unionByName(junk_rows)
 
     return result
 

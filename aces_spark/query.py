@@ -10,16 +10,20 @@
 2. static/demographic filter OR drop null-timestamp rows
    (``query.py:121-127``);
 3. trigger anchors via the count-constraint filter (``query.py:133-140``);
-4. recursive window-tree evaluation;
+4. window-tree evaluation — by default ONE join-free windowed pipeline
+   (``plans/fused.py``), or the reference's recursion with ``fused=False``;
 5. rename the anchor to ``trigger``; extract ``label`` /
    ``index_timestamp`` from their windows' struct summaries
    (``query.py:153-196``);
 6. project output columns in window-tree pre-order (``query.py:155-159``).
 
-Physical plan choices: the predicates DataFrame is cached before the
-recursion (every tree edge re-reads it — the reference reuses its eager
-in-memory frame the same way), and the trigger-anchor set is the most
-selective relation in the plan, so it is joined first at every level.
+Physical plan choices: the fused planner reads the predicates DataFrame
+once, through one ``subject_id`` exchange, so nothing is cached and no
+session conf is touched. Only ``fused=False`` caches the predicates
+DataFrame (every edge of its recursion re-reads it — the reference reuses
+its eager in-memory frame the same way), joins the trigger-anchor set (the
+most selective relation) first at every level, and relaxes the session's
+co-partitioning conf for its joins.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ from pyspark.sql import functions as F
 from .config import TaskExtractorConfig
 from .operators.constraints import check_constraints, check_static_variables
 from .plans.extract_subtree import extract_subtree
-from .plans.fused import can_fuse, extract_subtree_fused
+from .plans.fused import extract_subtree_fused
 from .utils import preorder_iter
 
 logger = logging.getLogger(__name__)
@@ -73,7 +77,7 @@ def query(
     validate_uniqueness: bool | str = "auto",
     cache: bool = True,
     checkpoint: bool = False,
-    fused: bool | None = None,
+    fused: bool = True,
 ) -> DataFrame:
     """Extract the cohort realizations for ``cfg`` from ``predicates_df``.
 
@@ -88,6 +92,12 @@ def query(
     under :data:`UNIQUENESS_AUTO_MAX_BYTES`, and skips it with a logged
     notice above that (un-collapsed events would silently corrupt window
     counts, so force with ``True`` if provenance is uncertain).
+
+    ``fused`` (default) evaluates the window tree with the join-free fused
+    planner (``plans/fused.py``), which handles every tree shape.
+    ``fused=False`` runs the reference-shaped recursion
+    (``plans/extract_subtree.py``) instead — the differential tests' second
+    opinion; ``cache`` and ``checkpoint`` apply to that path only.
     """
     if validate_uniqueness == "auto":
         if getattr(predicates_df, "_aces_keys_unique", False):
@@ -121,33 +131,30 @@ def query(
             F.col("subject_id").isNotNull() & F.col("timestamp").isNotNull()
         )
 
-    # Subset co-partitioning (r10, deep-tree exchange profile in
-    # COVERAGE.md): the recursion's joins key on (subject_id, <anchor
-    # ts>) while every window kernel partitions on subject_id alone.
-    # With Spark's default requireAllClusterKeysForCoPartition=true a
-    # hash(subject_id) side never satisfies a (subject_id, ts) join and
-    # BOTH sides re-shuffle around every tree edge; relaxing it lets
-    # the planner accept matching subject_id-only partitionings —
-    # correctness-neutral (same-key rows still co-locate under any key
-    # subset), and subject_id is the high-cardinality key so no
-    # parallelism is lost. Measured on the 5-window HF readmission
-    # shape at 2M rows/5k subjects: 22.7 s -> 19.0 s median, identical
-    # cohort. Dynamic conf, safe to set per-session.
-    try:
-        predicates_df.sparkSession.conf.set(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false"
-        )
-    except Exception:  # pragma: no cover - conf may be static on some builds
-        pass
-
-    use_fused = can_fuse(cfg.window_tree) if fused is None else fused
-    if use_fused:
-        # anchor-stable tree (all internal edges temporal): evaluate as ONE
-        # windowed pipeline with zero joins and no cache — see plans/fused.py
+    if fused:
+        # the whole tree as ONE windowed pipeline: zero joins, no cache —
+        # see plans/fused.py
         result = extract_subtree_fused(
             cfg.window_tree, predicates_df, F.col(cfg.trigger.predicate) >= 1
         )
     else:
+        spark = predicates_df.sparkSession
+        # Subset co-partitioning (r10, deep-tree exchange profile in
+        # COVERAGE.md): the recursion's joins key on (subject_id, <anchor
+        # ts>) while every window kernel partitions on subject_id alone.
+        # With Spark's default requireAllClusterKeysForCoPartition=true a
+        # hash(subject_id) side never satisfies a (subject_id, ts) join and
+        # BOTH sides re-shuffle around every tree edge; relaxing it lets
+        # the planner accept matching subject_id-only partitionings —
+        # correctness-neutral (same-key rows still co-locate under any key
+        # subset), and subject_id is the high-cardinality key so no
+        # parallelism is lost. Measured on the 5-window HF readmission
+        # shape at 2M rows/5k subjects: 22.7 s -> 19.0 s median, identical
+        # cohort. Dynamic conf, safe to set per-session.
+        try:
+            spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        except Exception:  # pragma: no cover - conf may be static on some builds
+            pass
         if cache:
             # the recursion re-reads this frame at every tree edge through
             # the cache; without this conf AQE treats the cached plan's
@@ -155,7 +162,7 @@ def query(
             # once per window kernel (3 redundant exchanges on the flagship
             # task, ~2× wall). Dynamic conf, safe to set per-session.
             try:
-                predicates_df.sparkSession.conf.set(
+                spark.conf.set(
                     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
                 )
             except Exception:  # pragma: no cover - conf may be static on some builds
@@ -167,10 +174,7 @@ def query(
         ).select("subject_id", F.col("timestamp").alias("subtree_anchor_timestamp"))
 
         result = extract_subtree(
-            cfg.window_tree, prospective_root_anchors, predicates_df, checkpoint=checkpoint,
-            # an explicit fused=False means "pure general path" (the
-            # differential tests rely on the two planners being independent)
-            subtree_fusion=fused is None,
+            cfg.window_tree, prospective_root_anchors, predicates_df, checkpoint=checkpoint
         )
 
     result = result.withColumnRenamed("subtree_anchor_timestamp", "trigger")

@@ -180,12 +180,12 @@ def meds_dir(spark, tmp_path_factory):
     return root
 
 
-def _run(spark, meds_dir, cfg_text, tmp_path):
+def _run(spark, meds_dir, cfg_text, tmp_path, fused=True):
     p = tmp_path / "task.yaml"
     p.write_text(textwrap.dedent(cfg_text))
     cfg = TaskExtractorConfig.load(p)
     predicates_df = get_predicates_df(cfg, spark, meds_dir, standard="meds")
-    labels = to_meds_labels(query(cfg, predicates_df))
+    labels = to_meds_labels(query(cfg, predicates_df, fused=fused))
     return sorted(
         (r["subject_id"], r["prediction_time"], r["boolean_value"]) for r in labels.collect()
     )
@@ -285,12 +285,12 @@ def test_other_meds_nested_preds_readmission(spark, meds_dir, tmp_path):
 
 
 def test_copartition_relaxation_differential(spark, meds_dir, tmp_path):
-    """query() relaxes spark.sql.requireAllClusterKeysForCoPartition so
-    the recursion's (subject_id, ts) joins accept the kernels'
+    """query(fused=False) relaxes spark.sql.requireAllClusterKeysForCoPartition
+    so the recursion's (subject_id, ts) joins accept the kernels'
     hash(subject_id) partitioning (r10 deep-tree exchange work). The
     setting is planner-only; strict and relaxed planning must produce
     the identical cohort on the hardest recursion shape."""
-    relaxed = _run(spark, meds_dir, HF_READMISSION_CFG, tmp_path)
+    relaxed = _run(spark, meds_dir, HF_READMISSION_CFG, tmp_path, fused=False)
     assert (
         spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false"
     )
@@ -308,7 +308,7 @@ def test_copartition_relaxation_differential(spark, meds_dir, tmp_path):
     try:
         mp.setattr(RuntimeConfig, "set", strict_set)
         spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
-        strict = _run(spark, meds_dir, HF_READMISSION_CFG, tmp_path)
+        strict = _run(spark, meds_dir, HF_READMISSION_CFG, tmp_path, fused=False)
     finally:
         mp.undo()
         spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")

@@ -13,7 +13,12 @@ randomized MEDS data for four tasks equivalent to the reference's
 * ``intervention_weaning.yaml`` — derived and() bundles, forward event-bound
   window with censoring (no ventilation_end ⇒ realization dropped);
 * ``long_term_recurrence.yaml`` — regex predicates, backward event-bound
-  window, (None, 0) anti-constraint.
+  window, (None, 0) anti-constraint;
+* the 5-window heart-failure readmission task — a backward event-bound
+  INTERNAL edge (the admission anchors a 5-year history window), a
+  record-start window, and a temporal -> record-end censoring chain
+  (the fixture has no heart-failure codes, so its in-stay labs stand in
+  for ``HF_dx`` to keep realizations plentiful).
 
 The recursion oracle mirrors ``src/aces/extract_subtree.py:279-386``
 including null-join semantics (a missing boundary yields a null child
@@ -172,6 +177,52 @@ windows:
     start_inclusive: False
     end_inclusive: True
     label: myocardial_infarction
+"""
+
+
+HF_READMISSION = """
+predicates:
+  admission:
+    code: { regex: "ADMISSION//.*" }
+  discharge:
+    code: { regex: "DISCHARGE//.*" }
+  HF_dx:
+    code: { regex: "LAB//.*" }
+trigger: discharge
+windows:
+  data_within_5yr_of_admit:
+    start: end - 1825d
+    end: admission_is_HF.start
+    start_inclusive: True
+    end_inclusive: False
+    has:
+      _ANY_EVENT: (1, None)
+  admission_is_HF:
+    start: end <- admission
+    end: trigger
+    start_inclusive: True
+    end_inclusive: True
+    has:
+      HF_dx: (1, None)
+  input:
+    start: NULL
+    end: trigger
+    start_inclusive: True
+    end_inclusive: True
+    index_timestamp: end
+  target:
+    start: input.end
+    end: start + 30d
+    start_inclusive: False
+    end_inclusive: True
+    label: admission
+  censor_protection:
+    start: target.end
+    end: null
+    start_inclusive: False
+    end_inclusive: True
+    has:
+      _ANY_EVENT: (1, None)
 """
 
 
@@ -498,6 +549,7 @@ CONFIGS = {
     "abnormal_lab": ABNORMAL_LAB,
     "intervention_weaning": INTERVENTION_WEANING,
     "long_term_recurrence": LONG_TERM_RECURRENCE,
+    "hf_readmission": HF_READMISSION,
 }
 
 
