@@ -16,10 +16,19 @@ kernels:
 
 Spark-first design decisions (vs the reference's physical plan):
 
-* The temporal kernel is a single ``Window.rangeBetween`` over
-  ``unix_micros(timestamp)`` — open endpoints become exact ±1 μs bound
-  shrinks (timestamps are μs precision; the reference itself relies on the
-  same trick at ``src/aces/aggregate.py:1013-1017``).
+* ONE sort key. ``unix_micros(timestamp)`` is materialized once as the
+  column :data:`SORT_KEY` (:func:`with_sort_key`) and every kernel window
+  orders by that one attribute. Catalyst then sees that a frame already
+  sorted by ``(subject_id, SORT_KEY)`` needs no re-sort: consecutive
+  ascending windows share one Sort, independent neighbours merge into one
+  Window operator, and a stack of kernels costs one Sort per direction
+  (ascending, plus descending for backward fills). An inline
+  ``unix_micros(...)`` per window would get a fresh alias each time and
+  force a Sort before every window.
+* The temporal kernel is a single ``Window.rangeBetween`` over the sort
+  key — open endpoints become exact ±1 μs bound shrinks (timestamps are μs
+  precision; the reference itself relies on the same trick at
+  ``src/aces/aggregate.py:1013-1017``).
 * The event-bound kernel reproduces the reference's
   cumsum + epsilon-shifted-boundary-interleave + directional-fill algorithm
   (``src/aces/aggregate.py:964-1126``) — that interleave is load-bearing for
@@ -29,7 +38,14 @@ Spark-first design decisions (vs the reference's physical plan):
   ``aggregate.py:1115-1126``) is replaced by an inline ``rangeBetween``
   window computed in the same stage, so the whole kernel is join-free and
   shuffle-minimal (exactly one exchange on ``subject_id``, reused by every
-  window function via identical partition keys).
+  window function via identical partition keys). The per-predicate running
+  sums (``__cum_*``, :func:`with_running_sums`) are kernel-independent, so
+  a frame that already carries them — the fused planner computes them once
+  — serves every stacked event-bound kernel.
+* Start/end-of-record boundaries are ``lag``/``lead`` on the sort key in
+  the ascending window (first/last timestamped row of the subject; exact
+  because ``(subject_id, timestamp)`` is unique), not separate unordered
+  ``min``/``max`` windows.
 
 At 100 TB: all per-subject windows are embarrassingly parallel after the
 single hash exchange; no broadcast, no driver materialization. Skewed
@@ -53,7 +69,38 @@ from ..types import (
     td_to_us,
 )
 
-META_COLS = {"subject_id", "timestamp"}
+#: ``unix_micros(timestamp)``, materialized once: every kernel window
+#: orders by this one attribute, so stacked windows share their sorts.
+SORT_KEY = "__ts_us"
+
+META_COLS = {"subject_id", "timestamp", SORT_KEY}
+
+
+def with_sort_key(df: DataFrame) -> DataFrame:
+    """``df`` plus the shared :data:`SORT_KEY` column (unchanged when it
+    already carries it)."""
+    if SORT_KEY in df.columns:
+        return df
+    return df.withColumn(SORT_KEY, F.unix_micros(F.col("timestamp")))
+
+
+def _asc() -> Window:
+    """Per-subject window in ascending sort-key order."""
+    return Window.partitionBy("subject_id").orderBy(F.col(SORT_KEY).asc())
+
+
+def _cum_col(c: str) -> str:
+    return f"__cum_{c}"
+
+
+def with_running_sums(df: DataFrame, value_cols: Sequence[str]) -> DataFrame:
+    """``df`` (which must carry :data:`SORT_KEY`) plus the per-subject
+    running sum ``__cum_{c}`` of each value column it does not carry yet
+    (ref ``:999-1000``): the event-bound kernel's step 1, shared by every
+    kernel stacked on the frame."""
+    w_cum = _asc().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    missing = [c for c in value_cols if _cum_col(c) not in df.columns]
+    return df.withColumns({_cum_col(c): F.sum(F.col(c)).over(w_cum) for c in missing})
 
 
 def _pred_cols(df: DataFrame) -> list[str]:
@@ -92,11 +139,11 @@ def aggregate_temporal_window(
 
     pred_cols = value_cols if value_cols is not None else _pred_cols(predicates_df)
     lo, hi = endpoint_expr.spark_range_bounds
-    ts_us = F.unix_micros(F.col("timestamp"))
+    ts_us = F.col(SORT_KEY)
     off_us = td_to_us(endpoint_expr.offset)
     ws_us = td_to_us(endpoint_expr.window_size)
 
-    w = Window.partitionBy("subject_id").orderBy(ts_us.asc()).rangeBetween(lo, hi)
+    w = _asc().rangeBetween(lo, hi)
 
     if lo > hi:
         # degenerate window (e.g. zero-length with an open endpoint): frame
@@ -114,9 +161,10 @@ def aggregate_temporal_window(
         F.timestamp_micros(ts_us + off_us + ws_us).alias(f"{prefix}timestamp_at_end"),
         *sums,
     ]
+    keyed = with_sort_key(predicates_df)
     if append:
-        return predicates_df.select("*", *out_cols)
-    return predicates_df.select("subject_id", "timestamp", *out_cols)
+        return keyed.select(*predicates_df.columns, *out_cols)
+    return keyed.select("subject_id", "timestamp", *out_cols)
 
 
 def _resolve_boundary(boundary) -> Column:
@@ -126,14 +174,16 @@ def _resolve_boundary(boundary) -> Column:
     ``src/aces/types.py:309-318``."""
     if isinstance(boundary, Column):
         return boundary
-    w_subj = Window.partitionBy("subject_id")
+    # null keys sort first, so the record's first timestamped row is the one
+    # whose predecessor has no key, and its last row has no successor
+    key = F.col(SORT_KEY)
     match boundary:
         case ("col", name):
             return F.col(name) > 0
         case ("record_start",):
-            return F.col("timestamp") == F.min("timestamp").over(w_subj)
+            return key.isNotNull() & F.lag(key).over(_asc()).isNull()
         case ("record_end",):
-            return F.col("timestamp") == F.max("timestamp").over(w_subj)
+            return key.isNotNull() & F.lead(key).over(_asc()).isNull()
         case _:
             raise ValueError(f"Invalid boundary descriptor: {boundary!r}")
 
@@ -191,19 +241,20 @@ def _event_bound_outputs(
 ) -> list[Column]:
     """Output columns of the event-bound kernel (steps 4+5: cumsum
     differences, endpoint corrections, offset correction, window
-    timestamps), given a relation carrying the ``{tp}``-namespaced temp
-    columns ``cum_*`` / ``bcum_*`` / ``off_*`` / ``ts_at_boundary``."""
+    timestamps), given a relation carrying the shared running sums
+    ``__cum_*`` and the ``{tp}``-namespaced temp columns ``bcum_*`` /
+    ``off_*`` / ``ts_at_boundary``."""
     zero = timedelta(0)
     off_us = td_to_us(offset)
 
     # --- step 4: cumsum differences + endpoint corrections ---
     def window_sum(c: str) -> Column:
         if mode == "bound_to_row":
-            val = F.col(f"{tp}cum_{c}") - F.col(f"{tp}bcum_{c}")
+            val = F.col(_cum_col(c)) - F.col(f"{tp}bcum_{c}")
             if (closed in ("left", "none") and offset <= zero) or offset < zero:
                 val = val - F.col(c)  # ref :1027-1031
         else:
-            val = F.col(f"{tp}bcum_{c}") - F.col(f"{tp}cum_{c}")
+            val = F.col(f"{tp}bcum_{c}") - F.col(_cum_col(c))
             if (closed in ("left", "both") and offset <= zero) or offset < zero:
                 val = val + F.col(c)  # ref :1046-1050
         return val
@@ -279,9 +330,10 @@ def boolean_expr_bound_sum(
        (ref ``:1085-1092``).
 
     ``prefix``/``append``/``value_cols`` behave as in
-    :func:`aggregate_temporal_window` (fused-planner support: outputs — and
-    all internal temp columns — are namespaced so several kernel
-    applications can stack on one relation).
+    :func:`aggregate_temporal_window` (fused-planner support: outputs and
+    internal temp columns are namespaced so several kernel applications can
+    stack on one relation; the step-1 running sums are the same for every
+    kernel, so they are reused from the frame when it carries them).
 
     ``carry`` names columns whose value AT THE RESOLVED BOUNDARY ROW is
     emitted for each row as ``{prefix}{name}`` (null when no boundary
@@ -299,8 +351,6 @@ def boolean_expr_bound_sum(
     boundary_col = _resolve_boundary(boundary_expr)
     tp = f"__{prefix}" if prefix else "__"  # temp-column namespace
 
-    w_subj = Window.partitionBy("subject_id")
-    ts_us = F.unix_micros(F.col("timestamp"))
     off_us = td_to_us(offset)
 
     # --- step 5 prep: offset-interval temporal sums, inline (ref :969-995) ---
@@ -311,21 +361,22 @@ def boolean_expr_bound_sum(
         if lo > hi:
             with_offset_cols = {f"{tp}off_{c}": F.lit(0).cast("long") for c in pred_cols}
         else:
-            w_off = w_subj.orderBy(ts_us.asc()).rangeBetween(lo, hi)
+            w_off = _asc().rangeBetween(lo, hi)
             with_offset_cols = {
                 f"{tp}off_{c}": F.coalesce(F.sum(F.col(c)).over(w_off), F.lit(0)) for c in pred_cols
             }
 
-    # --- step 1: per-subject cumulative sums (ref :999-1000) ---
-    w_cum = w_subj.orderBy(ts_us.asc()).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum_cols = {f"{tp}cum_{c}": F.sum(F.col(c)).over(w_cum) for c in pred_cols}
-    base = df.withColumns({**cum_cols, **with_offset_cols, f"{tp}bexpr": boundary_col})
+    # --- step 1: per-subject cumulative sums (ref :999-1000), unless the
+    # frame already carries them ---
+    base = with_running_sums(with_sort_key(df), pred_cols).withColumns(
+        {**with_offset_cols, f"{tp}bexpr": boundary_col}
+    )
 
     # --- steps 2+3: nearest-qualifying-boundary resolution ---
     # The reference interleaves epsilon-shifted boundary pseudo-rows and
     # directionally fills (ref :1012-1017, :1032-1036, :1052-1072). Because
     # every timestamp is integral μs, that interleave is EXACTLY a
-    # conditional first/last over a range frame on unix_micros: a boundary
+    # conditional first/last over a range frame on the sort key: a boundary
     # at ts_b is eligible for the row at ts_r iff its shifted sort key
     # ``ts_b - offset + eps`` falls strictly before (forward fill) / at-or-
     # after (backward fill) the row's key — i.e. iff ts_b - ts_r lies in a
@@ -334,15 +385,20 @@ def boolean_expr_bound_sum(
     # window stage instead of union + re-sort + fill over a doubled
     # relation (the Spark-first reformulation SURVEY §2.5 anticipates).
     # Eligibility reduced to one half-line on a signed key (see _fill_spec).
-    # For row_to_bound the key is NEGATED so the frame is GROWING rather
-    # than the direct shrinking frame (off_us - eps, unboundedFollowing):
-    # Spark evaluates growing frames incrementally but re-scans the
-    # remaining partition per row for shrinking ones — O(n) vs O(n²) per
-    # subject, which is the difference between a skewed 100k-event subject
-    # finishing in milliseconds and stalling its whole task.
+    # For row_to_bound the key is ordered DESCENDING (nulls first, as the
+    # negated key would sort) so the frame is GROWING rather than the
+    # direct shrinking frame (off_us - eps, unboundedFollowing): Spark
+    # evaluates growing frames incrementally but re-scans the remaining
+    # partition per row for shrinking ones — O(n) vs O(n²) per subject,
+    # which is the difference between a skewed 100k-event subject finishing
+    # in milliseconds and stalling its whole task. On a descending order a
+    # range bound of ``d`` reaches ``key - d``, which is exactly the
+    # half-line ``-ts_b <= -ts_r + d`` of the negated key.
     sign, fill_bound, exclude_boundary_counts = _fill_spec(mode, closed, off_us)
-    fill_key = ts_us if sign == 1 else (-ts_us)
-    w_fill = w_subj.orderBy(fill_key.asc()).rangeBetween(Window.unboundedPreceding, fill_bound)
+    w_dir = _asc() if sign == 1 else (
+        Window.partitionBy("subject_id").orderBy(F.col(SORT_KEY).desc_nulls_first())
+    )
+    w_fill = w_dir.rangeBetween(Window.unboundedPreceding, fill_bound)
 
     def fill(col: Column) -> Column:
         return F.last(col, ignorenulls=True).over(w_fill)
@@ -350,7 +406,7 @@ def boolean_expr_bound_sum(
     bnd_ts = F.when(F.col(f"{tp}bexpr"), F.col("timestamp"))
 
     def bnd_cum(c: str) -> Column:
-        val = F.col(f"{tp}cum_{c}")
+        val = F.col(_cum_col(c))
         if exclude_boundary_counts:
             val = val - F.col(c)
         return F.when(F.col(f"{tp}bexpr"), val)

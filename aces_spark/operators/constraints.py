@@ -7,10 +7,13 @@ Reimplements:
     ``src/aces/constraints.py:122-185``: keep subjects whose null-timestamp
     (static/demographic) rows satisfy ALL listed demographics, then drop the
     static rows and demographic columns.
+  * ``check_unique_keys`` — reference ``src/aces/query.py:110-115``: fail
+    when a ``(subject_id, timestamp)`` key occurs twice.
 
-Both are pure Column-expression filters (no UDFs, no actions) so Catalyst
-can push them down; the static filter is a per-subject windowed ANY, which
-keeps the plan join-free and reuses the subject_id partitioning.
+All are pure Column-expression filters (no UDFs, no actions) so Catalyst
+can push them down; the static filter is a per-subject windowed ANY and the
+uniqueness check a ``lag`` in the kernels' own sorted window, which keeps
+the plan join-free and reuses the subject_id partitioning.
 """
 
 from __future__ import annotations
@@ -21,6 +24,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..types import ANY_EVENT_COLUMN
+from .aggregate import SORT_KEY, with_sort_key
+
+#: ``lag``'s value for a subject's first row: no real sort key is this small
+#: (Spark timestamps stop at year 1), so it never equals one.
+_NO_PREVIOUS_ROW = -(1 << 63)
 
 
 def check_constraints(
@@ -88,4 +96,32 @@ def check_static_variables(patient_demographics: list[str], predicates_df: DataF
         .filter(F.col("__keep_subject"))
         .filter(F.col("timestamp").isNotNull())
         .drop("__keep_subject", *patient_demographics)
+    )
+
+
+def check_unique_keys(predicates_df: DataFrame) -> DataFrame:
+    """``predicates_df`` (plus the shared sort key) with a row filter that
+    fails the query with "The (subject_id, timestamp) columns must be
+    unique." when a subject has two rows with one timestamp — two
+    null-timestamp rows included, matching the reference's ``n_unique``.
+
+    The check is a ``lag`` over the kernels' own window (partitioned by
+    ``subject_id``, ascending sort key), so it adds no job, no exchange and
+    no sort: it runs inside the kernel stage, on every row, at any input
+    size, and surfaces at the query's first action as a
+    ``USER_RAISED_EXCEPTION``. Rows with a null ``subject_id`` are dropped
+    before any kernel reads them, and Catalyst may drop them before this
+    check too.
+    """
+    df = with_sort_key(predicates_df)
+    key = F.col(SORT_KEY)
+    w = Window.partitionBy("subject_id").orderBy(key.asc())
+    duplicate = F.lag(key, 1, _NO_PREVIOUS_ROW).over(w).eqNullSafe(key)
+    failed = F.when(
+        duplicate, F.raise_error(F.lit("The (subject_id, timestamp) columns must be unique."))
+    )
+    return (
+        df.withColumn("__duplicate", failed)
+        .filter(F.col("__duplicate").isNull())
+        .drop("__duplicate")
     )

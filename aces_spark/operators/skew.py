@@ -48,6 +48,7 @@ from ..types import (
     td_to_us,
 )
 from .aggregate import (
+    _cum_col,
     _event_bound_outputs,
     _fill_spec,
     _offset_interval_bounds,
@@ -507,7 +508,7 @@ def boolean_expr_bound_sum_chunked(
         f"{tp}ts_at_boundary": F.col("__f_ts"),
         **{f"{tp}bcum_{c}": F.col(f"__f_{c}") for c in pred_cols},
         **{
-            f"{tp}cum_{c}": F.col(f"{tp}icum_{c}") + F.col(f"__pre_{c}") for c in pred_cols
+            _cum_col(c): F.col(f"{tp}icum_{c}") + F.col(f"__pre_{c}") for c in pred_cols
         },
     }
     filled = moved.withColumns(transfer).filter(is_home).withColumns(final_cols)

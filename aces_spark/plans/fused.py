@@ -28,14 +28,23 @@ The whole recursion then collapses into ONE windowed scan for every tree:
 * child→parent remap joins (J2/J3) vanish — a carried summary already
   sits on the parent anchor's row.
 
+Every kernel orders by the one shared sort key (``operators/aggregate.py``)
+and the event-bound kernels share one set of running sums, so the pipeline
+sorts once per window direction.
+
 This preserves the general path's exact semantics, including the junk row it
 emits per subject when a pure single-child chain ends in an event-bound leaf
 with no qualifying boundary (the reference's null-key join behavior: the
 realization is replaced by one ``(subject, null)`` row with null summaries).
 Only the chain's final event-bound leaf emits it; an internal event-bound
 edge with an unresolved boundary just drops the row, since its null child
-anchor never joins a deeper window. Verified by differential tests
-(``tests/test_fused.py``) against the general planner across random
+anchor never joins a deeper window. The junk row comes from the same pass:
+one unordered per-subject ``min`` flags each subject's earliest junk row,
+one filter keeps ``valid OR first junk``, and the junk row's anchor and
+summaries are nulled. A realization is never both valid and junk (junk
+needs the leaf's boundary unresolved, validity needs it resolved), so no
+second pipeline, union or distinct is needed. Verified by differential
+tests (``tests/test_fused.py``) against the general planner across random
 trees/frames.
 
 At scale this is the difference between kernel-bound throughput (~3M rows/s
@@ -48,10 +57,17 @@ from __future__ import annotations
 import dataclasses
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.aggregate import aggregate_temporal_window, boolean_expr_bound_sum
+from ..operators.aggregate import (
+    META_COLS,
+    SORT_KEY,
+    aggregate_temporal_window,
+    boolean_expr_bound_sum,
+    with_running_sums,
+    with_sort_key,
+)
 from ..types import ANY_EVENT_COLUMN, TemporalWindowBounds
 from ..utils import Node
 
@@ -91,14 +107,15 @@ def extract_subtree_fused(
     with one row per valid trigger realization (plus the junk rows of a
     pure chain ending in an unresolved event-bound leaf).
     """
-    pred_cols = [c for c in predicates_df.columns if c not in ("subject_id", "timestamp")]
+    pred_cols = [c for c in predicates_df.columns if c not in META_COLS]
 
     if not subtree.children:
         return predicates_df.filter(root_valid).select(
             "subject_id", F.col("timestamp").alias(ANCHOR)
         )
 
-    df = predicates_df
+    # Catalyst prunes the running sums when no event-bound kernel reads them
+    df = with_running_sums(with_sort_key(predicates_df), pred_cols)
     summaries: list[tuple[Node, str]] = []  # (node, column prefix) in pre-order
     chain = _is_chain(subtree)
     counter = 0
@@ -179,39 +196,38 @@ def extract_subtree_fused(
 
     valid, junk = walk(subtree, timedelta(0))
 
-    struct_cols = []
-    for child, pfx in summaries:
-        struct_cols.append(
-            F.struct(
-                F.lit(child.name).alias("window_name"),
-                *[F.col(f"{pfx}{c}").alias(c) for c in SUMMARY_FIELDS + pred_cols],
-            ).alias(f"{child.name}_summary")
+    structs = {
+        f"{child.name}_summary": F.struct(
+            F.lit(child.name).alias("window_name"),
+            *[F.col(f"{pfx}{c}").alias(c) for c in SUMMARY_FIELDS + pred_cols],
+        )
+        for child, pfx in summaries
+    }
+
+    is_valid = F.coalesce(root_valid & valid, F.lit(False))
+    if junk is None:
+        return df.filter(is_valid).select(
+            "subject_id",
+            F.col("timestamp").alias(ANCHOR),
+            *[c.alias(name) for name, c in structs.items()],
         )
 
-    result = df.filter(F.coalesce(root_valid & valid, F.lit(False))).select(
-        "subject_id", F.col("timestamp").alias(ANCHOR), *struct_cols
+    # junk rows from the same pass: keep each subject's earliest junk row
+    # (one per subject, as the general path's distinct) with a null anchor
+    # and null summaries
+    df = df.withColumns(
+        {"__valid": is_valid, "__junk": F.coalesce(root_valid & junk, F.lit(False))}
     )
-
-    if junk is not None:
-        struct_types = {
-            f.name: f.dataType for f in result.schema.fields if f.name.endswith("_summary")
-        }
-        junk_rows = (
-            df.filter(F.coalesce(root_valid & junk, F.lit(False)))
-            .select("subject_id")
-            .distinct()
-            .select(
-                "subject_id",
-                F.lit(None).cast("timestamp").alias(ANCHOR),
-                *[
-                    F.lit(None).cast(dt).alias(name)
-                    for name, dt in struct_types.items()
-                ],
-            )
-        )
-        result = result.unionByName(junk_rows)
-
-    return result
+    first_junk_key = F.min(F.when(F.col("__junk"), F.col(SORT_KEY))).over(
+        Window.partitionBy("subject_id")
+    )
+    df = df.withColumn("__first_junk", F.col("__junk") & (F.col(SORT_KEY) == first_junk_key))
+    valid_only = F.col("__valid")
+    return df.filter(valid_only | F.col("__first_junk")).select(
+        "subject_id",
+        F.when(valid_only, F.col("timestamp")).alias(ANCHOR),
+        *[F.when(valid_only, c).alias(name) for name, c in structs.items()],
+    )
 
 
 def _is_chain(tree: Node) -> bool:

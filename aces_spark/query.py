@@ -2,11 +2,11 @@
 
 ``query(cfg, predicates_df)`` runs the full pipeline lazily:
 
-1. validate ``(subject_id, timestamp)`` uniqueness (the reference always
-   does, ``query.py:110-115``; here the default is ``"auto"`` — run the
-   eager check when Catalyst's size estimate for the input is below a
-   threshold, skip with a logged notice above it, since the check is a
-   full aggregation pass over a 100 TB input);
+1. materialize the shared sort key ``unix_micros(timestamp)`` and validate
+   ``(subject_id, timestamp)`` uniqueness, as the reference always does
+   (``query.py:110-115``) — a ``lag`` over that key in the kernels' first
+   sorted window, evaluated on every input row inside the kernel stage
+   (no eager job, no size threshold), failing the query's first action;
 2. static/demographic filter OR drop null-timestamp rows
    (``query.py:121-127``);
 3. trigger anchors via the count-constraint filter (``query.py:133-140``);
@@ -18,12 +18,13 @@
 6. project output columns in window-tree pre-order (``query.py:155-159``).
 
 Physical plan choices: the fused planner reads the predicates DataFrame
-once, through one ``subject_id`` exchange, so nothing is cached and no
-session conf is touched. Only ``fused=False`` caches the predicates
-DataFrame (every edge of its recursion re-reads it — the reference reuses
-its eager in-memory frame the same way), joins the trigger-anchor set (the
-most selective relation) first at every level, and relaxes the session's
-co-partitioning conf for its joins.
+once, through one ``subject_id`` exchange and one sort per window
+direction, so nothing is cached and no session conf is touched. Only
+``fused=False`` caches the predicates DataFrame (every edge of its
+recursion re-reads it — the reference reuses its eager in-memory frame the
+same way), joins the trigger-anchor set (the most selective relation)
+first at every level, and relaxes the session's co-partitioning conf for
+its joins.
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import TaskExtractorConfig
-from .operators.constraints import check_constraints, check_static_variables
+from .operators.aggregate import SORT_KEY
+from .operators.constraints import check_constraints, check_static_variables, check_unique_keys
 from .plans.extract_subtree import extract_subtree
 from .plans.fused import extract_subtree_fused
 from .utils import preorder_iter
@@ -42,39 +44,10 @@ from .utils import preorder_iter
 logger = logging.getLogger(__name__)
 
 
-def _estimated_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the optimized plan (parquet footer
-    sizes propagate through it), or None when it is unknown — the backend
-    doesn't expose the JVM plan (Spark Connect), or the estimate is the
-    Long.MaxValue "no idea" sentinel (Arrow-built local relations)."""
-    try:  # pragma: no cover - depends on backend internals
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-    return None if est >= (1 << 62) else est
-
-
-def _has_duplicate_keys(df: DataFrame) -> bool:
-    """True iff some ``(subject_id, timestamp)`` key (nulls included,
-    matching the reference's ``n_unique`` semantics) occurs twice. One
-    partial-aggregated pass; ``isEmpty`` stops at the first offender."""
-    dups = (
-        df.groupBy("subject_id", "timestamp")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-    )
-    return not dups.isEmpty()
-
-
-#: Above this Catalyst size estimate, ``validate_uniqueness="auto"`` skips
-#: the eager check (it is a full aggregation pass over the input).
-UNIQUENESS_AUTO_MAX_BYTES = 8 << 30
-
-
 def query(
     cfg: TaskExtractorConfig,
     predicates_df: DataFrame,
-    validate_uniqueness: bool | str = "auto",
+    validate_uniqueness: bool = True,
     cache: bool = True,
     checkpoint: bool = False,
     fused: bool = True,
@@ -86,12 +59,13 @@ def query(
     ``trigger`` (anchor timestamp), then one struct column per window-tree
     node in pre-order (reference ``src/aces/query.py:155-197``).
 
-    ``validate_uniqueness``: ``"auto"`` (default) runs the reference's
-    mandatory ``(subject_id, timestamp)`` uniqueness check
-    (``src/aces/query.py:110-115``) when the input's estimated size is
-    under :data:`UNIQUENESS_AUTO_MAX_BYTES`, and skips it with a logged
-    notice above that (un-collapsed events would silently corrupt window
-    counts, so force with ``True`` if provenance is uncertain).
+    ``validate_uniqueness`` (default ``True``) enforces the reference's
+    mandatory ``(subject_id, timestamp)`` uniqueness
+    (``src/aces/query.py:110-115``) at every input size and for every
+    loader: un-collapsed events would silently double-count window sums.
+    The check runs in the query's own sorted pass (no extra job), so a
+    duplicate key fails the first action on the result with "The
+    (subject_id, timestamp) columns must be unique."
 
     ``fused`` (default) evaluates the window tree with the join-free fused
     planner (``plans/fused.py``), which handles every tree shape.
@@ -99,29 +73,10 @@ def query(
     (``plans/extract_subtree.py``) instead — the differential tests' second
     opinion; ``cache`` and ``checkpoint`` apply to that path only.
     """
-    if validate_uniqueness == "auto":
-        if getattr(predicates_df, "_aces_keys_unique", False):
-            # the loader collapsed events with groupBy(subject_id,
-            # timestamp) — unique by construction, nothing to re-check
-            do_validate = False
-        else:
-            # skip only for provably-large inputs (parquet scans report
-            # real sizes); an UNKNOWN size means a hand-built local frame
-            # — exactly the un-collapsed-input case the check exists for
-            est = _estimated_plan_bytes(predicates_df)
-            do_validate = est is None or est <= UNIQUENESS_AUTO_MAX_BYTES
-            if not do_validate:
-                logger.info(
-                    "Skipping (subject_id, timestamp) uniqueness validation "
-                    "(input estimated at %s bytes); pass validate_uniqueness=True to force.",
-                    est,
-                )
-    else:
-        do_validate = bool(validate_uniqueness)
-    if do_validate:
-        logger.info("Checking if '(subject_id, timestamp)' columns are unique...")
-        if _has_duplicate_keys(predicates_df):
-            raise ValueError("The (subject_id, timestamp) columns must be unique.")
+    if validate_uniqueness:
+        # before the static and null-timestamp filters: every input row is
+        # checked, null-timestamp rows included
+        predicates_df = check_unique_keys(predicates_df)
 
     static_variables = [p for p in cfg.predicates if cfg.predicates[p].static]
     if static_variables:
@@ -138,6 +93,8 @@ def query(
             cfg.window_tree, predicates_df, F.col(cfg.trigger.predicate) >= 1
         )
     else:
+        # the recursion's summaries carry every non-key column
+        predicates_df = predicates_df.drop(SORT_KEY)
         spark = predicates_df.sparkSession
         # Subset co-partitioning (r10, deep-tree exchange profile in
         # COVERAGE.md): the recursion's joins key on (subject_id, <anchor

@@ -267,9 +267,6 @@ def plain_predicates_from_meds_df(data: DataFrame, predicates: dict) -> DataFram
     out = data.repartition("subject_id").groupBy("subject_id", "timestamp").agg(
         *[F.coalesce(F.sum(F.col(c)), F.lit(0)).cast(PRED_CNT_TYPE).alias(c) for c in predicates]
     )
-    # unique keys by construction (the collapse) — lets query()'s
-    # default-on uniqueness validation skip its aggregation pass
-    out._aces_keys_unique = True
     return out
 
 
@@ -473,9 +470,4 @@ def get_predicates_df(
             END_OF_RECORD_KEY,
             (F.col("timestamp") == F.max("timestamp").over(w_subj)).cast(PRED_CNT_TYPE),
         )
-
-    # every loader collapses events with groupBy(subject_id, timestamp), so
-    # the keys are unique BY CONSTRUCTION — tag the frame so query()'s
-    # default-on uniqueness validation skips the redundant aggregation pass
-    data._aces_keys_unique = True
     return data

@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 
 from aces_spark.config import (
     EventConfig,
@@ -214,3 +215,40 @@ def test_esgpt_end_to_end_query(spark, tmp_path):
     )
     result_static = query(cfg_static, pred_df_static).collect()
     assert [(r.subject_id, r.trigger) for r in result_static] == [(1, DT(2021, 1, 1, 0, 0))]
+
+
+def test_esgpt_duplicate_event_timestamps_raise(spark, tmp_path):
+    """ESGPT collapses measurements per event, not per (subject, timestamp):
+    two events of one subject at one instant leave a duplicate key. The
+    query must fail as the reference does (``src/aces/query.py:110-115``)
+    instead of counting ``lab`` twice in the window."""
+    subjects = spark.createDataFrame([(1,)], "subject_id long")
+    events = spark.createDataFrame(
+        [
+            (1, 1, DT(2021, 1, 1, 0, 0), "lab"),
+            (2, 1, DT(2021, 1, 1, 0, 0), "lab"),  # same subject, same instant
+        ],
+        "event_id long, subject_id long, timestamp timestamp, event_type string",
+    )
+    meas = spark.createDataFrame([(1,)], "event_id long")
+    subjects.write.parquet(str(tmp_path / "subjects_df.parquet"))
+    events.write.parquet(str(tmp_path / "events_df.parquet"))
+    meas.write.parquet(str(tmp_path / "dynamic_measurements_df.parquet"))
+    (tmp_path / "config.json").write_text('{"value_columns": {}}')
+
+    cfg = TaskExtractorConfig(
+        predicates={"lab": PlainPredicateConfig(code="event_type//lab")},
+        trigger=EventConfig("lab"),
+        windows={
+            "obs": WindowConfig(
+                start="trigger",
+                end="start + 24h",
+                start_inclusive=True,
+                end_inclusive=True,
+                has={"lab": "(2, None)"},
+            )
+        },
+    )
+    pred_df = get_predicates_df(cfg, spark, tmp_path, standard="esgpt", value_columns={})
+    with pytest.raises(SparkRuntimeException, match="must be unique"):
+        query(cfg, pred_df).collect()

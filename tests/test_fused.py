@@ -319,11 +319,11 @@ def test_fused_matches_general_internal_event_bound(spark, name, seed):
 
 
 def test_fused_is_join_free_single_exchange(spark):
-    """The fused physical plan contains no join operators; a tree without
-    junk rows needs exactly one hash exchange (the subject_id window
-    partitioning) — also with event-bound edges mid-tree. A chain ending in
-    an event-bound leaf adds only the junk-row union's distinct (one more
-    exchange over two columns)."""
+    """The fused physical plan contains no join operators and needs at most
+    one hash exchange (the subject_id window partitioning) — also with
+    event-bound edges mid-tree, and also for a chain ending in an
+    event-bound leaf, whose junk rows come from the same pass (no union, no
+    distinct's aggregate)."""
     df = _rand_frame(spark, 2)
 
     for cfg in (_configs()["temporal_chain"], _readmission_like_cfg(), _forward_fork_cfg()):
@@ -334,7 +334,9 @@ def test_fused_is_join_free_single_exchange(spark):
     for cfg in (_configs()["event_bound_leaf_fwd"], _double_hop_chain_cfg()):
         plan = _plan(spark, query(cfg, df))
         assert "Join" not in plan
-        assert plan.count(") Exchange") <= 2
+        assert plan.count(") Exchange") <= 1
+        assert ") Union" not in plan
+        assert ") HashAggregate" not in plan
 
 
 def test_default_query_leaves_session_conf_alone(spark):

@@ -73,14 +73,76 @@ def test_event_bound_kernel_no_shrinking_frames(pred_df, mode_name):
     """Neither kernel direction may emit an unboundedfollowing range frame:
     Spark evaluates those by re-scanning the rest of the partition for every
     row (O(n²) per subject — a skewed 100k-event subject stalls its task).
-    The backward fill is expressed as a growing frame over the negated key
-    instead; this guard keeps it that way."""
+    The backward fill is expressed as a growing frame over the descending
+    sort key instead; this guard keeps it that way."""
     end_event = "is_a" if mode_name == "fwd" else "-is_a"
     out = aggregate_event_bound_window(
         pred_df, ToEventWindowBounds(True, end_event, True, None)
     )
     plan = _plan(out).lower()
     assert "unboundedfollowing$()" not in plan.replace(" ", ""), plan
+
+
+def _readmission_cfg():
+    """The 5-window heart-failure readmission shape: a backward event edge
+    (``end <- is_a``) with a temporal leaf below it, a ``start: NULL``
+    sibling, and a temporal -> ``_RECORD_END`` chain."""
+    from aces_spark import EventConfig, TaskExtractorConfig, WindowConfig
+
+    return TaskExtractorConfig(
+        predicates={"is_a": PlainPredicateConfig("a"), "is_b": PlainPredicateConfig("b")},
+        trigger=EventConfig("is_b"),
+        windows={
+            "history": WindowConfig(
+                start="end - 72h", end="stay.start",
+                start_inclusive=True, end_inclusive=False,
+                has={"is_a": "(1, None)"},
+            ),
+            "stay": WindowConfig(
+                start="end <- is_a", end="trigger",
+                start_inclusive=True, end_inclusive=True,
+                has={"is_b": "(1, None)"},
+            ),
+            "input": WindowConfig(
+                start=None, end="trigger",
+                start_inclusive=True, end_inclusive=True, index_timestamp="end",
+            ),
+            "target": WindowConfig(
+                start="input.end", end="start + 2h",
+                start_inclusive=False, end_inclusive=True, label="is_a",
+            ),
+            "censor": WindowConfig(
+                start="target.end", end=None,
+                start_inclusive=False, end_inclusive=True,
+                has={"is_a": "(1, None)"},
+            ),
+        },
+    )
+
+
+def test_fused_readmission_sorts_once_per_direction(pred_df):
+    """Every kernel window orders by the one shared sort key, so the fused
+    5-window readmission plan sorts once per window direction (ascending,
+    plus descending for the record-end fill) instead of before every
+    window."""
+    from aces_spark import query
+
+    counts = _node_counts(query(_readmission_cfg(), pred_df))
+    assert counts.get("Sort", 0) <= 2, counts
+    assert counts.get("Exchange", 0) <= 1, counts
+
+
+def test_uniqueness_check_adds_no_sort_or_exchange(pred_df):
+    """The (subject_id, timestamp) uniqueness check is a lag in the
+    kernels' own sorted window: it must cost no extra Sort or Exchange."""
+    from aces_spark import query
+
+    cfg = _readmission_cfg()
+    checked = _node_counts(query(cfg, pred_df))
+    unchecked = _node_counts(query(cfg, pred_df, validate_uniqueness=False))
+    for node in ("Sort", "Exchange"):
+        assert checked.get(node, 0) == unchecked.get(node, 0), (checked, unchecked)
+    assert "raise_error" in _plan(query(cfg, pred_df))
 
 
 def test_decontaminate_broadcasts_benchmark(spark):

@@ -9,6 +9,8 @@ import logging
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import functions as F
 
 from aces_spark import (
     EventConfig,
@@ -46,14 +48,92 @@ def _pred_df(spark, rows):
 
 
 def test_duplicate_keys_raise_by_default(spark):
-    """The reference always enforces key uniqueness; small inputs get the
-    eager check by default (validate_uniqueness='auto')."""
+    """The reference always enforces key uniqueness; the check runs inside
+    the query's sorted pass and fails its first action."""
     rows = [
         (1, DT(2020, 1, 1, 0), 1, 0),
         (1, DT(2020, 1, 1, 0), 0, 1),  # duplicate key
     ]
-    with pytest.raises(ValueError, match="must be unique"):
+    with pytest.raises(SparkRuntimeException, match="must be unique"):
         query(_cfg(), _pred_df(spark, rows)).collect()
+
+
+@pytest.mark.parametrize("fused", [True, False], ids=["fused", "general"])
+def test_duplicate_key_in_parquet_input_raises(spark, tmp_path, fused):
+    """A parquet scan carries a real Catalyst size estimate; the check must
+    not depend on it. The general planner runs the same check, but reading
+    it through its cached frame can surface it wrapped in a SparkException
+    (the message is unchanged)."""
+    rows = [
+        (1, DT(2020, 1, 1, 0), 1, 0),
+        (1, DT(2020, 1, 1, 6), 0, 1),
+        (1, DT(2020, 1, 1, 6), 0, 1),  # duplicate key
+        (2, DT(2020, 1, 2, 0), 1, 0),
+    ]
+    _pred_df(spark, rows).write.parquet(str(tmp_path / "preds"))
+    df = spark.read.parquet(str(tmp_path / "preds"))
+    with pytest.raises(SparkRuntimeException if fused else Exception, match="must be unique"):
+        query(_cfg(), df, fused=fused).collect()
+
+
+def test_duplicate_key_after_loader_transformation_raises(spark):
+    """A loader's frame is unique by construction, but a user transformation
+    can break that; the check runs on whatever frame query() receives."""
+    from aces_spark.sources.predicates import plain_predicates_from_meds_df
+
+    meds = spark.createDataFrame(
+        [
+            (1, DT(2020, 1, 1, 0), "SIGNUP"),
+            (1, DT(2020, 1, 1, 6), "PURCHASE"),
+            (2, DT(2020, 1, 2, 0), "SIGNUP"),
+        ],
+        "subject_id long, time timestamp, code string",
+    )
+    loaded = plain_predicates_from_meds_df(
+        meds,
+        {"signup": PlainPredicateConfig("SIGNUP"), "purchase": PlainPredicateConfig("PURCHASE")},
+    )
+    assert query(_cfg(), loaded).count() == 2
+    transformed = loaded.select("*")
+    transformed = transformed.unionByName(
+        transformed.filter((F.col("subject_id") == 2) & (F.col("signup") == 1))
+    )
+    with pytest.raises(SparkRuntimeException, match="must be unique"):
+        query(_cfg(), transformed).collect()
+
+
+def test_duplicate_key_on_non_trigger_row_raises(spark):
+    """Every input row is checked, not just the trigger rows."""
+    rows = [
+        (1, DT(2020, 1, 1, 0), 1, 0),
+        (1, DT(2020, 1, 5, 0), 0, 1),
+        (1, DT(2020, 1, 5, 0), 0, 1),  # duplicate key, no trigger on it
+    ]
+    with pytest.raises(SparkRuntimeException, match="must be unique"):
+        query(_cfg(), _pred_df(spark, rows)).collect()
+
+
+def test_duplicate_null_timestamp_rows_raise(spark):
+    """Two null-timestamp rows of one subject share the key (subject, null),
+    as in the reference's ``n_unique``; the check runs before the
+    null-timestamp filter drops them."""
+    rows = [
+        (1, None, 0, 0),
+        (1, None, 0, 1),  # duplicate (1, null) key
+        (1, DT(2020, 1, 1, 0), 1, 0),
+    ]
+    with pytest.raises(SparkRuntimeException, match="must be unique"):
+        query(_cfg(), _pred_df(spark, rows)).collect()
+
+
+def test_single_null_timestamp_row_per_subject_passes(spark):
+    rows = [
+        (1, None, 0, 0),
+        (1, DT(2020, 1, 1, 0), 1, 0),
+        (2, None, 0, 0),
+        (2, DT(2020, 1, 1, 0), 1, 0),
+    ]
+    assert query(_cfg(), _pred_df(spark, rows)).count() == 2
 
 
 def test_duplicate_keys_allowed_when_disabled(spark):

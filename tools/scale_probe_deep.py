@@ -134,7 +134,6 @@ def main() -> int:
         .persist()
     )
     df.count()  # materialize
-    df._aces_keys_unique = True  # (subject, seq) timestamps unique by construction
 
     reps = int(os.environ.get("SPARK_GRAFT_PROBE_REPS", "3"))
 
